@@ -723,10 +723,11 @@ def _per_query_lines(headline: dict, write_audits: dict) -> list[str]:
     the window together with everything printed after it — one 1.8 KB
     headline line plus the 431-byte totals line cannot both fit in
     2 KB. Strategy: chunk the headline dict into self-contained ~500
-    byte lines, ordered by ascending anchor so the LAST chunks — the
-    ones guaranteed to survive with the totals line — carry the
-    multi-second queries that drive geomean/watch comparisons, and the
-    sub-second scheduler-bound rows are what truncation sacrifices.
+    byte lines, ordered by ascending measured time (this run's
+    `headline[q]`, not `ANCHOR`) so the LAST chunks — the ones
+    guaranteed to survive with the totals line — carry this run's
+    slowest queries, which drive geomean/watch comparisons, and the
+    fastest rows are what truncation sacrifices.
     The `part` field makes any truncation visible to a reader. Values
     are rounded to 1 decimal (full precision stays in the main JSON
     line and BENCH_local*.json). The write-audit line prints FIRST
@@ -743,7 +744,7 @@ def _per_query_lines(headline: dict, write_audits: dict) -> list[str]:
             separators=(",", ":"),
         )
     ]
-    ordered = sorted(headline, key=lambda q: (ANCHOR.get(q, 0.0), q))
+    ordered = sorted(headline, key=lambda q: (headline[q], q))
     chunks: list[dict] = []
     cur: dict = {}
     for q in ordered:

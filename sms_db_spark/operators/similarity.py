@@ -504,25 +504,6 @@ def _n_pack_chunks(
     return -(-cent.count() // max_packed_k)
 
 
-def _balanced_rank_ids(pinned: DataFrame) -> DataFrame:
-    """0-based dense ids `_rn` (a permutation of 0..K-1) over a PINNED
-    (persisted or localCheckpointed) frame — the shared two-phase
-    partition-offset numbering (functions/numbering.py; extracted from
-    the r12 deliberate twin with canonical.dense_ids, VERDICT r12
-    item 4), WITHOUT dense_ids' range-repartition: chunk assignment
-    only needs a BALANCED bijective numbering, not a globally ordered
-    one, and the fold's output is chunk-invariant anyway (argmax over
-    a union == argmax of per-chunk argmaxes). The caller MUST pass a
-    pinned frame — the partition ids must be identical between the
-    kernel's counts job and its numbering job, which re-executed
-    lineage does not guarantee. strict=False (ADVICE r12 #1): if the
-    pin is violated anyway, try_element_at turns the orphan pid's ids
-    into NULLs, and _packed_fold's post-checkpoint bijectivity
-    aggregate raises its explanatory error instead of Spark's opaque
-    mid-job MAP_KEY_DOES_NOT_EXIST."""
-    return partition_offset_ids(pinned, ["cid"], "_rn", start=0, strict=False)
-
-
 def _packed_fold(
     emb: DataFrame,
     cent: DataFrame,
@@ -543,26 +524,19 @@ def _packed_fold(
     modulus — rank chunks are BALANCED by construction (sizes differ by
     at most 1), so no chunk can exceed the single-array cap however the
     cid values are distributed. The rank is the DISTRIBUTED two-phase
-    numbering (_balanced_rank_ids — per-partition window + driver-side
-    offset cumsum, the dense_ids pattern), never a global
-    no-partitionBy window: at the K ≈ 10^8 sizing this path exists for,
-    a single-task rank over ~50 GB of packed centroids would bottleneck
-    or OOM (ADVICE r11 #1). The centroid frame is PERSISTED before
-    numbering (stable partition ids between the two phases + centroid
-    lineage runs once) and the ranked frame localCheckpointed after
-    (the per-chunk filters re-scan K materialized rows instead of
-    re-shuffling them B times); the persist is RELEASED as soon as the
-    ranked checkpoint materializes, so two full copies of the K-row
-    frame never coexist past the numbering (review r12 — at the
-    ~50 GB K ≈ 10^8 sizing a leaked first copy would double executor
-    storage pressure exactly where this path matters). persist is
-    WEAKER than a checkpoint: on block loss Spark recomputes from
-    lineage, and a partition landing in a pid the counts job never
-    saw would make element_at return NULL → a silently dropped
-    centroid (review r12, second pass). So the numbering is VALIDATED
-    after the checkpoint — one aggregate over the K materialized rows
-    pins (no NULL _rn, count == the counts total, max == K-1), and a
-    violation raises loudly instead of mis-assigning. An empty
+    numbering (functions/numbering.partition_offset_ids — per-partition
+    window + driver-side offset cumsum, the dense_ids pattern, without
+    its range-repartition: chunk assignment only needs a BALANCED
+    bijective numbering, and the fold's output is chunk-invariant
+    anyway, argmax over a union == argmax of per-chunk argmaxes), never
+    a global no-partitionBy window: at the K ≈ 10^8 sizing this path
+    exists for, a single-task rank over ~50 GB of packed centroids
+    would bottleneck or OOM (ADVICE r11 #1). The ranked frame is
+    localCheckpointed (the per-chunk filters re-scan K materialized rows
+    instead of re-shuffling them B times), and the numbering is
+    VALIDATED after the checkpoint — one aggregate over the K
+    materialized rows pins (no NULL _rn, min 0, max == K-1, K distinct),
+    and a violation raises loudly instead of mis-assigning. An empty
     chunk's argmax folds to NULL, which the cross-chunk array_max
     skips."""
     n_chunks = _n_pack_chunks(cent, max_packed_k, k_max_hint)
@@ -573,13 +547,9 @@ def _packed_fold(
         return emb.crossJoin(F.broadcast(packed)).withColumn(
             "_best", F.expr(argmax_sql("cents"))
         )
-    pinned = rows.persist()
-    try:
-        # the counts job inside _balanced_rank_ids materializes the
-        # persist; the eager checkpoint then owns the ranked copy
-        ranked = _balanced_rank_ids(pinned).localCheckpoint(eager=True)
-    finally:
-        pinned.unpersist()
+    ranked = partition_offset_ids(rows, ["cid"], "_rn", start=0).localCheckpoint(
+        eager=True
+    )
     # fail-loud bijectivity validation (see docstring): one aggregate
     # over the K checkpointed rows — a permutation of 0..K-1 has no
     # NULLs, min 0, max K-1, and K distinct values
@@ -601,9 +571,8 @@ def _packed_fold(
         raise RuntimeError(
             "chunked packing rank is not a 0..K-1 permutation "
             f"(n={v['n']}, nulls={v['nulls']}, min={v['mn']}, max={v['mx']}, "
-            f"distinct={v['nd']}) — the persisted centroid frame was likely "
-            "recomputed with a different partition layout between the two "
-            "numbering phases; failing instead of silently mis-chunking"
+            f"distinct={v['nd']}) — the numbering kernel did not return a "
+            "bijection; failing instead of silently mis-chunking"
         )
     df = emb
     for i in range(n_chunks):

@@ -59,20 +59,14 @@ def dense_ids(df: DataFrame, order_cols: list[str], id_col: str = "_id", start: 
     """Assign dense sequential ids start..start+N-1 in the total order
     of order_cols (W2, the AUTOINCREMENT shape of sms-db.pl:49).
 
-    Range-repartition on the order (deterministic on re-run, which is
-    what makes the kernel's two-action contract hold over unpinned
-    lineage), then the shared two-phase partition-offset numbering —
-    per-partition row_number + driver-side cumsum of per-partition
-    counts, no global single-partition window (functions/numbering.py;
-    extracted from the r12 deliberate twin with
-    similarity._balanced_rank_ids, VERDICT r12 item 4). strict=True:
-    this path has no downstream bijectivity validation, so a
-    broken-contract pid should throw Spark's ANSI map-key error rather
-    than silently yield NULL ids.
+    Range-repartition on the order, then the shared two-phase
+    partition-offset numbering — per-partition row_number + driver-side
+    cumsum of per-partition counts, no global single-partition window
+    (functions/numbering.py).
     """
     n_part = max(df.rdd.getNumPartitions(), 1)
     ordered = df.repartitionByRange(n_part, *[F.col(c) for c in order_cols])
-    return partition_offset_ids(ordered, order_cols, id_col, start=start, strict=True)
+    return partition_offset_ids(ordered, order_cols, id_col, start=start)
 
 
 @dataclass
@@ -100,10 +94,12 @@ def finalize_import(
     first-wins within batch: min(local_id) per hash (staging order ≙ the
     reference's insert order). Store-side dedup: left_anti on hash.
     """
-    # persist the hashed batch: this function drives several actions over
-    # it (counts, id-offset collect, final select) — without a persist each
-    # action re-executes the normalizer join chain from the source
+    # persist the hashed batch (one row per staged message): the count
+    # and the message numbering's pin both read it — without a persist
+    # each re-executes the normalizer join chain from the source. It is
+    # released once both numberings hold their own pins.
     hashed = with_message_hash(staged_messages, staged_parts).persist()
+    total = hashed.count() + ignored_count
 
     keeper = hashed.groupBy("hash").agg(F.min("local_id").alias("local_id"))
     batch_unique = hashed.join(keeper, ["hash", "local_id"], "inner")
@@ -122,8 +118,6 @@ def finalize_import(
         id_start, part_id_start = 1, 1
 
     with_ids = dense_ids(new_msgs, ["local_id"], "_id", start=id_start)
-
-    total = staged_messages.count() + ignored_count
     inserted = with_ids.count()
     duplicates = total - inserted - ignored_count
 
@@ -137,6 +131,7 @@ def finalize_import(
     parts = dense_ids(
         kept_parts, ["message_id", "part_seq"], "_id", start=part_id_start
     ).select("_id", "message_id", "data", "text", "content_type", "filename")
+    hashed.unpersist()
     total_parts = parts.count()
 
     if existing_messages is not None and existing_messages.head(1):

@@ -360,7 +360,9 @@ def fold_cold_batches_all(
 
     recover_interrupted_fold(spark, shard_dir)  # nothing else is in flight
     manifest = _load_manifest(spark, shard_dir)
-    ids = list(shard_ids)
+    # one stage per shard: two concurrent stages of one shard share its
+    # `.fold_*` dir and can delete each other's write
+    ids = sorted(set(shard_ids))
     if not ids:
         return []
     with ThreadPoolExecutor(max_workers=min(8, len(ids))) as pool:

@@ -164,3 +164,23 @@ def test_ambient_check_flags_the_r8_signature():
     out = bench.ambient_check(base, flat_cal, flat_overhead, flat_py)
     assert out["suspect_ambient"] is False and not out["suspects_vs_anchor"]
     assert out["anchor_total_ratio"] == 1.0
+
+
+def test_per_query_chunks_follow_measured_time_not_anchor():
+    """The tail-surviving last chunk must hold this run's slowest lanes:
+    a lane with the smallest anchor but the largest measured time lands
+    in the last chunk, one with the largest anchor but the smallest
+    measured time in the first."""
+    import json
+
+    fast_anchor = min(bench.ANCHOR, key=bench.ANCHOR.get)
+    slow_anchor = max(bench.ANCHOR, key=bench.ANCHOR.get)
+    headline = {q: 1.0 + i / 100 for i, q in enumerate(bench.HEADLINE)}
+    headline[fast_anchor] = 99.0
+    headline[slow_anchor] = 0.1
+    lines = [json.loads(s) for s in bench._per_query_lines(headline, {})]
+    chunks = [d["queries"] for d in lines if d["metric"] == "per_query_headline"]
+    assert len(chunks) > 1
+    assert fast_anchor in chunks[-1]
+    assert slow_anchor in chunks[0]
+    assert sum(len(c) for c in chunks) == len(headline)

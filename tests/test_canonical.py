@@ -87,3 +87,31 @@ def test_dense_ids_helper_multi_partition(spark):
     out = dense_ids(df, ["k"], "_id", start=1)
     rows = out.orderBy("k").collect()
     assert [r["_id"] for r in rows] == list(range(1, 1001))
+
+
+def test_import_ids_are_dense_on_every_collect(spark, tmp_path):
+    """A backup of ~4k messages with multi-part MMS, staged the way the
+    importer stages one (XML -> read_xml_staging -> normalize_xml): the
+    `_id`s of both store tables must be exactly 1..N however often the
+    lazy result is re-executed, and the sqlite3 write (UNIQUE `_id`s)
+    must succeed. Holds only if the numbering's counts job and its
+    numbering window see the same range partitioning of the parts join;
+    otherwise `parts` gets duplicate and missing ids."""
+    from perfbench import backup
+    from sms_db_spark.sinks.sqlite_sink import write_store_sqlite
+    from sms_db_spark.sources.xml_source import read_xml_staging
+
+    doc = backup.generate(seed=1, n=4_000)
+    xml = str(tmp_path / "a.xml")
+    backup.write_xml(doc, xml)
+    res = finalize_import(*normalize_xml(*read_xml_staging(spark, xml)))
+    want = backup.expected_store(doc)
+    assert res.inserted == len(want.messages)
+    assert res.total_parts == len(want.parts)
+    for _ in range(3):
+        for table, n in ((res.messages, res.inserted), (res.parts, res.total_parts)):
+            ids = sorted(r["_id"] for r in table.select("_id").collect())
+            assert ids == list(range(1, n + 1))
+    db = str(tmp_path / "store.db")
+    write_store_sqlite(res.messages, res.parts, db)
+    assert backup.check_store(db, want) == []

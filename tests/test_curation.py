@@ -228,11 +228,28 @@ def test_q141_epoch_shuffle_partitions_and_mixes(spark):
     assert curation.q141_epoch_shuffle(spark, SF_DIR).collect() == rows
 
 
-def test_q141_epoch_shuffle_sort_is_distributed(spark):
+def test_q141_epoch_shuffle_sort_is_distributed(spark, monkeypatch):
     """The global order must come from a range-partitioned sort plus a
     per-partition window (dense_ids' two-phase kernel) — never a
-    single-partition global window over row data."""
+    single-partition global window over row data. The kernel pins its
+    range-partitioned input, so that half of the plan is read from the
+    frame dense_ids hands to the kernel."""
+    from sms_db_spark.sources import canonical
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    numbered = []
+    kernel = canonical.partition_offset_ids
+
+    def spy(df, *args, **kwargs):
+        numbered.append(plan(df))
+        return kernel(df, *args, **kwargs)
+
+    monkeypatch.setattr(canonical, "partition_offset_ids", spy)
     d = curation.q141_epoch_shuffle(spark, SF_DIR)
-    plan = d._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning(_k" in plan
-    assert "SinglePartition" not in plan
+    (before_pin,) = numbered
+    assert "rangepartitioning(_k" in before_pin
+    assert "SinglePartition" not in before_pin
+    assert "hashpartitioning(_pid" in plan(d)
+    assert "SinglePartition" not in plan(d)

@@ -318,8 +318,9 @@ def test_chunk_invariance_across_cap_boundary_sweep(spark):
         assert got == base_cos, f"cap={cap}"
 
 
-def test_balanced_rank_ids_is_distributed_and_bijective(spark):
-    """ADVICE r11 #1: the chunked-packing rank must never be a global
+def test_partition_offset_ids_is_distributed_and_bijective(spark):
+    """ADVICE r11 #1: the chunked-packing rank (the shared numbering
+    kernel, called the way _packed_fold calls it) must never be a global
     no-partitionBy window (single task over ~50 GB at the K ~= 10^8
     sizing the path exists for). Pin (a) the plan: the numbering window
     partitions by the physical partition id — no SinglePartition
@@ -335,14 +336,14 @@ def test_balanced_rank_ids_is_distributed_and_bijective(spark):
     import pytest
 
     import sms_db_spark.operators.similarity as S
+    from sms_db_spark.functions.numbering import partition_offset_ids
 
     cent = (
         spark.range(0, 101)
         .select(F.col("id").alias("cid"), F.array(F.lit(1.0)).alias("c_emb"))
         .repartition(7)  # deliberately scattered, uneven partitions
-        .localCheckpoint(eager=True)
     )
-    ranked = S._balanced_rank_ids(cent)
+    ranked = partition_offset_ids(cent, ["cid"], "_rn", start=0)
     got = sorted(r["_rn"] for r in ranked.select("_rn").collect())
     assert got == list(range(101))
 
@@ -355,8 +356,8 @@ def test_balanced_rank_ids_is_distributed_and_bijective(spark):
     assert re.search(r"hashpartitioning\(_pid", plan), plan
 
     # empty frame: zero rows, no crash
-    empty = cent.filter(F.lit(False)).localCheckpoint(eager=True)
-    assert S._balanced_rank_ids(empty).count() == 0
+    empty = cent.filter(F.lit(False))
+    assert partition_offset_ids(empty, ["cid"], "_rn", start=0).count() == 0
 
     # hint validation: opt-in, names the violated contract
     os.environ["SMS_DB_SPARK_VALIDATE_K_HINT"] = "1"

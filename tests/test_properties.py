@@ -293,22 +293,15 @@ _cids = st.sets(
 
 @settings(max_examples=8, deadline=None)
 @given(cids=_cids, n_part=st.integers(min_value=1, max_value=7))
-def test_balanced_rank_ids_is_a_permutation_on_any_pinned_layout(
-    spark, cids, n_part
-):
-    """The strict=False arm of the shared numbering kernel
-    (functions/numbering.py, extracted r13): over ANY pinned
-    partitioning, `_rn` must be a permutation of 0..K-1 — the property
-    _packed_fold's bijectivity validation assumes the kernel provides
-    whenever the caller honors the pin contract."""
-    from sms_db_spark.operators.similarity import _balanced_rank_ids
+def test_partition_offset_ids_is_a_permutation_on_any_layout(spark, cids, n_part):
+    """The shared numbering kernel (functions/numbering.py, extracted
+    r13), called the way _packed_fold calls it: over ANY partitioning,
+    `_rn` must be a permutation of 0..K-1 — the property _packed_fold's
+    bijectivity validation assumes the kernel provides."""
+    from sms_db_spark.functions.numbering import partition_offset_ids
 
-    pinned = (
-        spark.createDataFrame([(c,) for c in cids], "cid long")
-        .repartition(n_part)
-        .localCheckpoint(eager=True)
-    )
-    out = _balanced_rank_ids(pinned).collect()
+    df = spark.createDataFrame([(c,) for c in cids], "cid long").repartition(n_part)
+    out = partition_offset_ids(df, ["cid"], "_rn", start=0).collect()
     assert sorted(r._rn for r in out) == list(range(len(cids)))
     assert {r.cid for r in out} == set(cids)  # nothing dropped or invented
 

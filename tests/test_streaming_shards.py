@@ -319,6 +319,24 @@ def test_fold_cold_batches_all_matches_serial_folds(spark, tmp_path):
     assert fold_cold_batches_all(spark, all_dir, range(N)) == []
 
 
+def test_fold_cold_batches_all_folds_a_duplicated_shard_id_once(spark, tmp_path):
+    """A shard listed twice is staged and committed once: one fold meta
+    per shard, and the manifest, integrity gate and rows are conserved."""
+    from sms_db_spark.streaming.shards import fold_cold_batches_all
+
+    shard_dir = str(tmp_path / "stream")
+    docs = _three_batches(spark, shard_dir)
+    dup = _shard_in_all_batches(spark, shard_dir)  # has cold batches to fold
+    before = merged_manifest(spark, shard_dir)
+    metas = fold_cold_batches_all(spark, shard_dir, [dup, *range(N), dup])
+    shards = [m["shard"] for m in metas]
+    assert shards.count(dup) == 1
+    assert len(shards) == len(set(shards))
+    assert merged_manifest(spark, shard_dir) == before  # additive = exact
+    assert verify_stream_shards(spark, shard_dir)["ok"]
+    assert spark.read.parquet(shard_dir).count() == docs.count()
+
+
 def test_fold_cold_batches_all_crash_between_commits_recovers(spark, tmp_path):
     """Death AFTER some serial commits with other shards still staged:
     every staged dir carries its marker, so recovery finishes exactly
